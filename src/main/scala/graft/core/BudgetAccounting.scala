@@ -1,5 +1,6 @@
 package graft.core
 
+import scala.collection.mutable
 import scala.collection.mutable.ArrayBuffer
 
 /** Resolved budget for one mechanism after budget computation.
@@ -539,11 +540,18 @@ final class PLDBudgetAccountant(
   private def thresholdingDelta: Double =
     if (requests.exists(h => isThresholding(h.mechanismType))) 0.25 * totalDelta else 0.0
 
-  /** The PLD of one request at a given base noise std (unit-sensitivity form;
-    * the request's sensitivity/weight scale its noise). */
-  private def singlePld(h: BudgetHandle, base: Double): PLD = {
-    val mechStd = h.sensitivity * base / h.weight
-    h.mechanismType match {
+  /** The noise family that decides a request's PLD: a thresholding
+    * mechanism's PLD is its additive counterpart's. */
+  private def pldFamily(t: MechanismType): MechanismType = t match {
+    case LaplaceThresholding => Laplace
+    case GaussianThresholding => Gaussian
+    case other => other
+  }
+
+  /** The PLD of one request type at normalized noise std `mechStd` (a
+    * request's `sensitivity * base / weight`). */
+  private def singlePld(t: MechanismType, mechStd: Double): PLD =
+    t match {
       case Laplace | LaplaceThresholding =>
         PLD.fromLaplace(mechStd / sqrt2, pldDiscretization, pessimistic)
       case Gaussian | GaussianThresholding =>
@@ -558,26 +566,35 @@ final class PLDBudgetAccountant(
           PLD.alwaysInfeasible(pldDiscretization)
         else PLD.fromPrivacyParameters(eps0, delta0, pldDiscretization, pessimistic)
     }
-  }
 
   /** The composition fold shared by [[composeDistributions]] and
     * [[epsilonForBase]] — ONE definition of the order / selfCompose
     * handling, so the public composition and what the budget search
     * optimizes cannot diverge. `abortIfInfAbove` enables the early
-    * infinity-mass exit (None = composed PLD can never satisfy it). */
+    * infinity-mass exit (None = composed PLD can never satisfy it).
+    * Requests of one family at one normalized std (e.g. MeanCount and
+    * MeanSum) share one discretized PLD and one self-composition; the
+    * fold still composes them one by one in request order. */
   private def foldCompose(base: Double, abortIfInfAbove: Option[Double]): Option[PLD] = {
+    val singles = mutable.HashMap.empty[(MechanismType, Double), PLD]
+    val selfComposed = mutable.HashMap.empty[(MechanismType, Double, Int), PLD]
     var composed: PLD = null
     var infAcc = 0.0
     val it = requests.iterator
     while (it.hasNext) {
       val h = it.next()
-      val one = singlePld(h, base)
+      val family = pldFamily(h.mechanismType)
+      val mechStd = h.sensitivity * base / h.weight
+      val one = singles.getOrElseUpdate((family, mechStd), singlePld(h.mechanismType, mechStd))
       infAcc = 1 - (1 - infAcc) * math.pow(1 - one.infinityMass, h.count.toDouble)
       abortIfInfAbove match {
         case Some(d) if infAcc > d => return None
         case _ =>
       }
-      val pld = if (h.count > 1) one.selfCompose(h.count) else one
+      val pld =
+        if (h.count > 1)
+          selfComposed.getOrElseUpdate((family, mechStd, h.count), one.selfCompose(h.count))
+        else one
       composed = if (composed == null) pld else composed.compose(pld)
     }
     Option(composed)
@@ -601,6 +618,11 @@ final class PLDBudgetAccountant(
   private def findMinimumBaseNoiseStd(): Double = {
     val delta = totalDelta - thresholdingDelta
     val threshold = 1e-4
+    // each base is evaluated once per search: the first bisection midpoint
+    // hi / 2 is always a bracketing probe already tried
+    val epsilonAt = mutable.HashMap.empty[Double, Double]
+    def epsilon(base: Double): Double =
+      epsilonAt.getOrElseUpdate(base, epsilonForBase(base, delta))
     var hi = {
       // Double against the REDUCED delta (total minus the thresholding
       // reservation): the binary search below verifies mids against it, so
@@ -608,13 +630,13 @@ final class PLDBudgetAccountant(
       // could converge to an unverified hi that overspends the budget
       // whenever thresholding mechanisms reserve 25% of delta.
       var mx = 1.0
-      while (epsilonForBase(mx, delta) > totalEpsilon) mx *= 2
+      while (epsilon(mx) > totalEpsilon) mx *= 2
       mx
     }
     var lo = 0.0
     while (lo + threshold < hi) {
       val mid = (hi - lo) / 2 + lo
-      if (epsilonForBase(mid, delta) <= totalEpsilon) hi = mid else lo = mid
+      if (epsilon(mid) <= totalEpsilon) hi = mid else lo = mid
     }
     hi
   }

@@ -153,29 +153,29 @@ object PLD {
   /** Mean-preserving binning: the mass of each inter-grid interval
     * (g_i, g_i + h] is split between its two endpoint grid points so the
     * expected loss is preserved exactly (the accuracy mechanism behind
-    * connect-the-dots discretization). `massFn(a, b)` / `meanFn(a, b)` are
-    * the distribution's mass and partial expectation over (a, b],
-    * atoms included. */
+    * connect-the-dots discretization). `massOf(i)` / `meanOf(i)` are the
+    * distribution's mass and partial expectation over (i h, (i + 1) h],
+    * atoms included; `below` is the mass at or below the lowest grid
+    * point. */
   private def binMeanPreserving(
       h: Double, iLo: Int, iHi: Int,
-      massFn: (Double, Double) => Double,
-      meanFn: (Double, Double) => Double): Array[Double] = {
+      massOf: Int => Double,
+      meanOf: Int => Double,
+      below: Double): Array[Double] = {
     val pmf = new Array[Double](iHi - iLo + 1)
     var i = iLo
     while (i < iHi) {
       val a = i * h
-      val b = (i + 1) * h
-      val m = massFn(a, b)
+      val m = massOf(i)
       if (m > 0) {
-        val mean = meanFn(a, b) / m
+        val mean = meanOf(i) / m
         val w = math.min(1.0, math.max(0.0, (mean - a) / h))
         pmf(i - iLo) += m * (1 - w)
         pmf(i + 1 - iLo) += m * w
       }
       i += 1
     }
-    // mass exactly at or below the lowest grid point
-    pmf(0) += massFn(Double.NegativeInfinity, iLo * h)
+    pmf(0) += below
     pmf
   }
 
@@ -185,20 +185,22 @@ object PLD {
     * is a certified UPPER bound of the true value (the direction Google's
     * dp_accounting uses by default, `pessimistic_estimate=True`). Costs
     * O(h) bias per mechanism where mean-preserving costs O(h^2); use it
-    * when a certified guarantee matters more than tightness. */
+    * when a certified guarantee matters more than tightness. Arguments as
+    * in [[binMeanPreserving]]. */
   private def binPessimistic(
       h: Double, iLo: Int, iHi: Int,
-      massFn: (Double, Double) => Double): Array[Double] = {
+      massOf: Int => Double,
+      below: Double): Array[Double] = {
     val pmf = new Array[Double](iHi - iLo + 1)
     var i = iLo
     while (i < iHi) {
-      val m = massFn(i * h, (i + 1) * h)
+      val m = massOf(i)
       if (m > 0) pmf(i + 1 - iLo) += m
       i += 1
     }
     // mass at or below the lowest grid point rounds UP onto it (safe:
     // moving loss up only overestimates)
-    pmf(0) += massFn(Double.NegativeInfinity, iLo * h)
+    pmf(0) += below
     pmf
   }
 
@@ -230,9 +232,11 @@ object PLD {
     val cap = defaultCap(h)
     val iLo = math.max(math.floor(-maxLoss / h), math.floor(-cap / h)).toInt
     val iHi = math.min(math.ceil(maxLoss / h), math.ceil(cap / h)).toInt
+    val massOf = (i: Int) => massFn(i * h, (i + 1) * h)
+    val below = massFn(Double.NegativeInfinity, iLo * h)
     val pmf =
-      if (pessimistic) binPessimistic(h, iLo, iHi, massFn)
-      else binMeanPreserving(h, iLo, iHi, massFn, meanFn)
+      if (pessimistic) binPessimistic(h, iLo, iHi, massOf, below)
+      else binMeanPreserving(h, iLo, iHi, massOf, i => meanFn(i * h, (i + 1) * h), below)
     val inf = infinityMassOf(pmf) // mass above the cap (1/b > cap)
     new PLD(h, iLo, pmf, inf, cap)
   }
@@ -245,14 +249,6 @@ object PLD {
     val mu = 1.0 / (2 * sigma * sigma)
     val std = math.sqrt(2 * mu)
     def pdf(z: Double): Double = math.exp(-0.5 * z * z) / math.sqrt(2 * math.Pi)
-    def cdf(l: Double): Double =
-      if (l == Double.NegativeInfinity) 0.0 else DpNoise.phi((l - mu) / std)
-    // partial mean over (-inf, l]: mu*Phi(z) - std*phi(z)
-    def pmean(l: Double): Double =
-      if (l == Double.NegativeInfinity) 0.0
-      else { val z = (l - mu) / std; mu * DpNoise.phi(z) - std * pdf(z) }
-    def massFn(a: Double, b2: Double): Double = cdf(b2) - cdf(a)
-    def meanFn(a: Double, b2: Double): Double = pmean(b2) - pmean(a)
     val cap = defaultCap(h)
     val k = 7.8
     val iLo = math.max(math.floor((mu - k * std) / h), math.floor(-cap / h)).toInt
@@ -264,9 +260,24 @@ object PLD {
       // bracketing; they are infeasible, not an error (a negative-size
       // pmf allocation crashed here before)
       return alwaysInfeasible(h)
+    // CDF and partial mean over (-inf, l] (mu Phi(z) - std phi(z)) at every
+    // grid boundary l = i h, evaluated ONCE: boundary i closes interval
+    // i - 1 and opens interval i, and Phi (erfc) dominates the cost
+    val n = iHi - iLo + 1
+    val cdf = new Array[Double](n)
+    val pmean = if (pessimistic) null else new Array[Double](n)
+    var j = 0
+    while (j < n) {
+      val z = ((iLo + j) * h - mu) / std
+      cdf(j) = DpNoise.phi(z)
+      if (pmean != null) pmean(j) = mu * cdf(j) - std * pdf(z)
+      j += 1
+    }
+    val massOf = (i: Int) => cdf(i + 1 - iLo) - cdf(i - iLo)
     val pmf =
-      if (pessimistic) binPessimistic(h, iLo, iHi, massFn)
-      else binMeanPreserving(h, iLo, iHi, massFn, meanFn)
+      if (pessimistic) binPessimistic(h, iLo, iHi, massOf, cdf(0))
+      else binMeanPreserving(h, iLo, iHi, massOf,
+        i => pmean(i + 1 - iLo) - pmean(i - iLo), cdf(0))
     val inf = infinityMassOf(pmf)
     new PLD(h, iLo, pmf, inf, cap)
   }
@@ -321,35 +332,64 @@ object PLD {
     else convolveFft(a, b)
   }
 
+  /** Direct convolution, visiting only the runs of non-zero entries of
+    * `b` (a partition-selection PMF has at most 4 non-zero entries in an
+    * array of length 2 eps0 / h; a dense `b` is one run). Runs are taken
+    * last to first, so every out(k) still adds its products a(i) b(k - i)
+    * in increasing i, the order of the plain double loop; the skipped
+    * products are +-0.0, and adding one to a sum that starts at +0.0
+    * changes no bit. */
   private def convolveDirect(a: Array[Double], b: Array[Double]): Array[Double] = {
     val out = new Array[Double](a.length + b.length - 1)
+    var hi = b.length
+    while (hi > 0) {
+      while (hi > 0 && b(hi - 1) == 0.0) hi -= 1
+      var lo = hi
+      while (lo > 0 && b(lo - 1) != 0.0) lo -= 1
+      if (lo < hi) addRun(a, b, lo, hi, out)
+      hi = lo
+    }
+    out
+  }
+
+  /** out(i + j) += a(i) b(j) for every i and every j in [lo, hi). */
+  private def addRun(a: Array[Double], b: Array[Double], lo: Int, hi: Int,
+      out: Array[Double]): Unit = {
     var i = 0
     while (i < a.length) {
       val ai = a(i)
       if (ai != 0.0) {
-        var j = 0
-        while (j < b.length) {
+        var j = lo
+        while (j < hi) {
           out(i + j) += ai * b(j)
           j += 1
         }
       }
       i += 1
     }
-    out
   }
 
   /** Iterative radix-2 Cooley-Tukey FFT over split re/im arrays (standard
-    * public-domain algorithm); clamps the tiny negative round-off masses. */
+    * public-domain algorithm); clamps the tiny negative round-off masses.
+    * A self-convolution (`a eq b`, every selfCompose square) transforms
+    * its operand once and multiplies the spectrum by itself. */
   private def convolveFft(a: Array[Double], b: Array[Double]): Array[Double] = {
     val n = a.length + b.length - 1
     var size = 1
     while (size < n) size <<= 1
     val are = java.util.Arrays.copyOf(a, size); val aim = new Array[Double](size)
-    val bre = java.util.Arrays.copyOf(b, size); val bim = new Array[Double](size)
     fft(are, aim, invert = false)
-    fft(bre, bim, invert = false)
+    val (bre, bim) =
+      if (a eq b) (are, aim)
+      else {
+        val re = java.util.Arrays.copyOf(b, size); val im = new Array[Double](size)
+        fft(re, im, invert = false)
+        (re, im)
+      }
     var i = 0
     while (i < size) {
+      // both products read index i before it is overwritten, so the
+      // aliased spectra give the same bits as two separate transforms
       val re = are(i) * bre(i) - aim(i) * bim(i)
       val im = are(i) * bim(i) + aim(i) * bre(i)
       are(i) = re; aim(i) = im

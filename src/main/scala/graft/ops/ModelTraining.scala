@@ -43,6 +43,9 @@ final case class IGradBuf(g: Array[Long], loss: Long, n: Long, nCorrect: Long)
   * row contract, not just a spec. */
 object ModelTraining {
 
+  /** Numbers each [[crossValidateExact]] call's job group. */
+  private val cvCalls = new java.util.concurrent.atomic.AtomicLong()
+
   /** The feature extraction shared with scoring: hashed unigram+bigram
     * buckets (md5 leading-60-bit convention, mod `dim`), kept WITH
     * repetition — mean pooling divides by the count, exactly
@@ -332,8 +335,9 @@ object ModelTraining {
     // each fold's jobs run under its own job group so a failed fold can
     // CANCEL its siblings' in-flight jobs (plain shutdown() would let
     // them run to completion in the background after the caller already
-    // received the failure — wasted cluster work)
-    val jobGroup = s"graft-cv-${System.identityHashCode(feats)}"
+    // received the failure — wasted cluster work); the id is unique per
+    // call, so one call's cancel never reaches a concurrent call's folds
+    val jobGroup = s"graft-cv-${cvCalls.incrementAndGet()}"
     val rows = try scala.concurrent.Await.result(
       scala.concurrent.Future.sequence((0 until folds).map { fold =>
         scala.concurrent.Future {

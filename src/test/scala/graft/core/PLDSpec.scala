@@ -72,10 +72,152 @@ class PLDSpec extends AnyFunSuite {
     assert(math.abs(viaFft.sum - 1.0) < 1e-9)
     assert(big.length + huge.length > 0) // silence unused warnings
   }
+
+  // ---- bit-identity of the de-duplicated kernels ----
+  // The reference implementations below are the per-interval / dense
+  // formulations the kernels replaced; every comparison is on raw bits.
+
+  /** (start, pmf, infinityMass) of a Gaussian PLD binned interval by
+    * interval, four Phi evaluations per interval. */
+  private def gaussianPerInterval(sigma: Double, h: Double,
+      pessimistic: Boolean): (Int, Array[Double], Double) = {
+    val mu = 1.0 / (2 * sigma * sigma)
+    val std = math.sqrt(2 * mu)
+    def pdf(z: Double): Double = math.exp(-0.5 * z * z) / math.sqrt(2 * math.Pi)
+    def cdf(l: Double): Double =
+      if (l == Double.NegativeInfinity) 0.0 else DpNoise.phi((l - mu) / std)
+    def pmean(l: Double): Double =
+      if (l == Double.NegativeInfinity) 0.0
+      else { val z = (l - mu) / std; mu * DpNoise.phi(z) - std * pdf(z) }
+    def massFn(a: Double, b: Double): Double = cdf(b) - cdf(a)
+    def meanFn(a: Double, b: Double): Double = pmean(b) - pmean(a)
+    val iLo = math.max(math.floor((mu - 7.8 * std) / h), math.floor(-40.0 / h)).toInt
+    val iHi = math.min(math.ceil((mu + 7.8 * std) / h), math.ceil(40.0 / h)).toInt
+    if (iLo > iHi) return (0, Array(0.0), 1.0)
+    val pmf = new Array[Double](iHi - iLo + 1)
+    for (i <- iLo until iHi) {
+      val a = i * h
+      val b = (i + 1) * h
+      val m = massFn(a, b)
+      if (m > 0) {
+        if (pessimistic) pmf(i + 1 - iLo) += m
+        else {
+          val w = math.min(1.0, math.max(0.0, (meanFn(a, b) / m - a) / h))
+          pmf(i - iLo) += m * (1 - w)
+          pmf(i + 1 - iLo) += m * w
+        }
+      }
+    }
+    pmf(0) += massFn(Double.NegativeInfinity, iLo * h)
+    val inf = 1.0 - pmf.sum
+    (iLo, pmf, if (inf < 1e-14) 0.0 else inf)
+  }
+
+  private def sameBits(x: Double, y: Double): Boolean =
+    java.lang.Double.doubleToRawLongBits(x) == java.lang.Double.doubleToRawLongBits(y)
+
+  test("gaussian PLD: one Phi per grid point gives the per-interval bits") {
+    for (sigma <- Seq(0.02, 0.5, 1.0, 3.4, 50.0); h <- Seq(1e-2, 1e-3, 1e-4);
+        pessimistic <- Seq(false, true)) {
+      val got = PLD.fromGaussian(sigma, h, pessimistic)
+      val (start, pmf, inf) = gaussianPerInterval(sigma, h, pessimistic)
+      val at = s"sigma=$sigma h=$h pessimistic=$pessimistic"
+      assert(got.start == start, at)
+      assert(java.util.Arrays.equals(got.pmf, pmf), at)
+      assert(sameBits(got.infinityMass, inf), at)
+    }
+  }
+
+  test("direct convolution skipping zero entries gives the dense-loop bits") {
+    def dense(a: Array[Double], b: Array[Double]): Array[Double] = {
+      val out = new Array[Double](a.length + b.length - 1)
+      for (i <- a.indices if a(i) != 0.0; j <- b.indices) out(i + j) += a(i) * b(j)
+      out
+    }
+    // the engine's shape: composed metric PLD (outer) with a partition
+    // selection PLD (inner, <= 4 non-zero entries)
+    val metrics = PLD.fromGaussian(3.4, 1e-3).compose(PLD.fromGaussian(3.4, 1e-3))
+    for (eps0 <- Seq(0.2, 0.41368, 0.8)) {
+      val selection = PLD.fromPrivacyParameters(eps0, 2e-6, 1e-3)
+      assert(metrics.pmf.length.toLong * selection.pmf.length <= (1L << 24))
+      assert(java.util.Arrays.equals(
+        PLD.convolve(metrics.pmf, selection.pmf), dense(metrics.pmf, selection.pmf)),
+        s"eps0=$eps0")
+    }
+    // random operands: zero runs on both sides, dense, zero-padded dense
+    val rnd = new scala.util.Random(7)
+    def sparse(n: Int, pZero: Double) =
+      Array.fill(n)(if (rnd.nextDouble() < pZero) 0.0 else rnd.nextDouble() / n)
+    val padded = new Array[Double](300) ++ sparse(500, 0.0) ++ new Array[Double](200)
+    for ((a, b) <- Seq((sparse(3000, 0.2), sparse(900, 0.99)),
+        (sparse(1200, 0.2), sparse(1500, 0.3)), (sparse(50, 0.0), sparse(40, 0.0)),
+        (sparse(2000, 0.0), padded))) {
+      assert(java.util.Arrays.equals(PLD.convolve(a, b), dense(a, b)),
+        s"${a.length} x ${b.length}")
+    }
+  }
+
+  test("FFT self-convolution transforms once and gives the two-transform bits") {
+    // convolve(a, a.clone) transforms each operand; convolve(a, a) reuses
+    // the one spectrum
+    val gauss = PLD.fromGaussian(3.4, 1e-3).pmf
+    val rnd = new scala.util.Random(11)
+    val random = Array.fill(6000)(rnd.nextDouble() / 6000)
+    for (a <- Seq(gauss, random)) {
+      assert(a.length.toLong * a.length > (1L << 24), "must take the FFT path")
+      assert(java.util.Arrays.equals(PLD.convolve(a, a), PLD.convolve(a, a.clone())))
+    }
+  }
 }
 
 class PLDBudgetAccountantSpec extends AnyFunSuite {
   import MechanismType._
+
+  test("resolved base noise stds are pinned bit for bit") {
+    // Exact doubles, no tolerance: the PLD search de-duplicates work
+    // (one Phi per grid point, one PLD per distinct mechanism, shared
+    // self-convolution spectra, memoized probes) and must not move a bit.
+    def hex(s: String): Double = java.lang.Double.parseDouble(s)
+    def resolve(eps: Double, delta: Double, h: Double, pessimistic: Boolean,
+        ms: Seq[(MechanismType, Int, String)]) = {
+      val acc = new PLDBudgetAccountant(eps, delta, pldDiscretization = h,
+        pessimistic = pessimistic)
+      val hs = ms.map { case (t, c, n) => acc.requestBudget(t, count = c, name = n) }
+      acc.computeBudgets()
+      (acc, hs.map(_.spec))
+    }
+    // the benchmark's release shapes (DPEngine request order) at eps 2,
+    // delta 1e-5: {count, sum, mean} Gaussian and {p50, p90} Laplace
+    val gaussian = Seq((Gaussian, 1, "MeanCount"), (Gaussian, 1, "MeanSum"),
+      (PartitionSelection, 1, "PartitionSelection"))
+    val laplace = Seq((Laplace, 1, "Quantile"), (PartitionSelection, 1, "PartitionSelection"))
+    val cases = Seq(
+      ("gaussian h=1e-3", resolve(2.0, 1e-5, 1e-3, false, gaussian), "0x1.b594p1"),
+      ("laplace h=1e-3", resolve(2.0, 1e-5, 1e-3, false, laplace), "0x1.6a0cp0"),
+      ("gaussian h=1e-3 pessimistic", resolve(2.0, 1e-5, 1e-3, true, gaussian), "0x1.b5e6p1"),
+      ("gaussian h=1e-4", resolve(2.0, 1e-5, 1e-4, false, gaussian), "0x1.b594p1"),
+      ("count=10", resolve(1.0, 1e-6, 1e-3, false,
+        Seq((Gaussian, 10, "G"), (Laplace, 1, "L"))), "0x1.c7ad8p3"))
+    for ((name, (acc, specs), want) <- cases) {
+      val base = acc.baseNoiseStd.get
+      assert(base == hex(want),
+        s"$name: base ${java.lang.Double.toHexString(base)} != $want")
+      specs.filter(_.noiseStdDev.isDefined).foreach(s =>
+        assert(s.noiseStdDev.get == base, s"$name: ${s.name}"))
+    }
+    // the partition-selection specs and the composed PLD at the resolved
+    // base, for the Gaussian shape
+    val (acc, specs) = cases.head._2
+    val selection = specs.last
+    assert(selection.epsilon == hex("0x1.a79cf03b2dd8dp-2"), selection.toString)
+    assert(selection.delta == hex("0x1.159e798e9385p-19"), selection.toString)
+    assert(cases(1)._2._2.last.epsilon == hex("0x1.fffd07be9d606p-1"))
+    assert(cases(1)._2._2.last.delta == hex("0x1.4f8966508548fp-18"))
+    val composed = acc.composeDistributions(acc.baseNoiseStd.get)
+    assert(composed.start == -4892 && composed.pmf.length == 9957)
+    assert(java.util.Arrays.hashCode(composed.pmf) == 1741039726)
+    assert(composed.infinityMass == hex("0x1.159e798e9385p-19"))
+  }
 
   test("pure-Laplace (delta = 0) path composes count-fold") {
     // a mechanism applied count times must split epsilon count ways on

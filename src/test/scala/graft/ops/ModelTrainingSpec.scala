@@ -115,4 +115,34 @@ class ModelTrainingSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](ModelTraining.crossValidateExact(
       mk(2), col("text"), col("label"), col("id"), folds = 1))
   }
+
+  test("exact k-fold CV: two calls on one frame run under distinct job groups") {
+    // a failed call cancels its own job group; a shared id would let it
+    // cancel a concurrent call's folds
+    val groups = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .filter(_.startsWith("graft-cv-")).foreach(groups.add)
+    }
+    val df = (1 to 60).map { i =>
+      (i.toLong, s"t$i " + (if (i % 2 == 0) "goodword" else "badword"), i % 2 == 0)
+    }.toDF("id", "text", "label")
+    // listener events arrive asynchronously: poll until `n` groups are seen
+    def awaitGroups(n: Int): Unit = {
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (groups.size < n && System.nanoTime() < deadline) Thread.sleep(20)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      ModelTraining.crossValidateExact(df, col("text"), col("label"), col("id"),
+        folds = 2, iters = 1).collect()
+      awaitGroups(1)
+      assert(groups.size == 1, s"first call's fold jobs: $groups")
+      ModelTraining.crossValidateExact(df, col("text"), col("label"), col("id"),
+        folds = 2, iters = 1).collect()
+      awaitGroups(2)
+      assert(groups.size == 2, s"each call needs its own job group: $groups")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }
